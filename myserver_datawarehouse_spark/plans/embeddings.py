@@ -1086,7 +1086,10 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-probe map-only scan, and the recall join is
     probe-count-sized — the audit adds nothing super-linear, so it can
     run continuously as a data-quality monitor next to the index build."""
-    from myserver_datawarehouse_spark.session import materialize
+    from myserver_datawarehouse_spark.session import (
+        materialize,
+        parallel_actions,
+    )
 
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("vec_id")
@@ -1106,8 +1109,6 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe_rank / est_raw cut over this single materialized frame —
     # training runs ONCE, so the nprobe curve costs filters, not
     # re-trainings.
-    from concurrent.futures import ThreadPoolExecutor
-
     def _exact():
         return materialize(
             embedding_topk_gemm(spark, sf_dir)
@@ -1121,9 +1122,7 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             _ivfpq_candidates(spark, sf_dir, max(RECALL_NPROBE_SWEEP))
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_exact, f_cand4 = pool.submit(_exact), pool.submit(_cand4)
-        exact, cand4 = f_exact.result(), f_cand4.result()
+    exact, cand4 = parallel_actions(_exact, _cand4)
     ivf = embedding_ann_ivf(spark, sf_dir).select("query_id", "vec_id")
     w_adc = Window.partitionBy("query_id").orderBy("est_raw", "vec_id")
 

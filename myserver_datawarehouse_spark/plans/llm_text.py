@@ -137,6 +137,19 @@ def _minhash_pair_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _minhash_pairs_for(_docs(spark, sf_dir))
 
 
+def _shingle_hashes(d: DataFrame) -> DataFrame:
+    """Distinct (doc_id, h) shingle-hash rows of any (doc_id, text)
+    frame, as lineage: stage one of the near-dup substrate
+    (shingle -> signature -> band keys -> verify). Callers choose how
+    to cache it (`_shingle_hash_frame`, or `.persist()` on the
+    streaming index path)."""
+    return (
+        TX.shingle_rows(d, SHINGLE_K)
+        .select("doc_id", TX.hash60("g").alias("h"))
+        .distinct()
+    )
+
+
 def _shingle_hash_frame(d: DataFrame) -> DataFrame:
     """The materialized distinct (doc_id, shingle-hash) frame — the ONE
     table a production dedup stack persists and feeds to every member
@@ -144,10 +157,82 @@ def _shingle_hash_frame(d: DataFrame) -> DataFrame:
     because every consumer reads it multiple times (see the callers'
     comments); at 100 TB it is a persisted intermediate, not a
     recompute-per-pass lineage."""
-    return materialize(
-        TX.shingle_rows(d, SHINGLE_K)
-        .select("doc_id", TX.hash60("g").alias("h"))
-        .distinct()
+    return materialize(_shingle_hashes(d))
+
+
+def _minhash_signatures(hs: DataFrame) -> DataFrame:
+    """(doc_id, n, sig) over shingle-hash rows: the MINHASH_N slots
+    are codegen'd MIN aggregates (map-side partials), not higher-order
+    array folds, and the shingle-set size `n` rides along in the same
+    groupBy. Callers that need no `n` select it away and column pruning
+    drops the count from the aggregate. Docs with zero shingles have no
+    rows, so they drop out instead of carrying all-NULL signatures."""
+    p = F.lit(TX.MINHASH_P)
+    return (
+        hs.groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            *[
+                F.min((F.lit(a) * (F.col("h") % p) + b) % p).alias(f"s{i}")
+                for i, (a, b) in enumerate(TX.minhash_params(MINHASH_N))
+            ],
+        )
+        .select(
+            "doc_id",
+            "n",
+            F.array(*[f"s{i}" for i in range(MINHASH_N)]).alias("sig"),
+        )
+    )
+
+
+def _lsh_bands(sig: DataFrame) -> DataFrame:
+    """(doc_id, bk) rows: the shipped LSH_BANDS x LSH_ROWS band keys
+    of each signature, one row per band."""
+    return sig.select(
+        "doc_id", F.explode(TX.lsh_band_keys("sig", LSH_BANDS, LSH_ROWS)).alias("bk")
+    )
+
+
+def _jaccard_verify(
+    cand: DataFrame,
+    hs_a: DataFrame,
+    hs_b: DataFrame,
+    n_a: DataFrame,
+    n_b: DataFrame,
+) -> DataFrame:
+    """Exact-Jaccard verify of candidate pairs. `cand` holds two doc-id
+    columns (left, right); `hs_a`/`hs_b` are the (doc_id, h) rows and
+    `n_a`/`n_b` the (doc_id, n) set sizes of each side. Returns
+    (left, right, jaccard) with jaccard rounded to 6 places and
+    >= JACCARD_TAU.
+
+    The intersection counts shared hashes per pair with an equi-join on
+    the hash value, so no per-pair array intersect runs."""
+    left, right = cand.columns
+    inter = (
+        cand.join(hs_a.alias("ha"), F.col(left) == F.col("ha.doc_id"))
+        .join(
+            hs_b.alias("hb"),
+            (F.col(right) == F.col("hb.doc_id"))
+            & (F.col("ha.h") == F.col("hb.h")),
+        )
+        .groupBy(left, right)
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    jac = F.col("inter").cast("double") / (
+        F.col("na") + F.col("nb") - F.col("inter")
+    ).cast("double")
+    return (
+        inter.join(
+            n_a.select(F.col("doc_id").alias(left), F.col("n").alias("na")),
+            left,
+        )
+        .join(
+            n_b.select(F.col("doc_id").alias(right), F.col("n").alias("nb")),
+            right,
+        )
+        .select(left, right, F.round(jac, 6).alias("jaccard"))
+        .filter(F.col("jaccard") >= JACCARD_TAU)
     )
 
 
@@ -163,30 +248,9 @@ def _minhash_band_candidates(
     has jaccard >= tau by the prefix-filter theorem and the verify
     computes the identical rounded jaccard — the filter can only drop
     pairs the exact side already excludes. `lsh_band_tuning` has used
-    this semi-join shape per config since round 13.
-
-    The shingle-set size rides along as a 17th aggregate in the
-    signature pass (one groupBy over hs instead of two full recomputes
-    of the shingle lineage — hs is lineage, not a materialized table)."""
-    p = F.lit(TX.MINHASH_P)
-    sig = (
-        hs.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            *[
-                F.min((F.lit(a) * (F.col("h") % p) + b) % p).alias(f"s{i}")
-                for i, (a, b) in enumerate(TX.minhash_params(MINHASH_N))
-            ],
-        )
-        .select(
-            "doc_id",
-            "n",
-            F.array(*[f"s{i}" for i in range(MINHASH_N)]).alias("sig"),
-        )
-    )
-    bands = sig.select(
-        "doc_id", F.explode(TX.lsh_band_keys("sig", LSH_BANDS, LSH_ROWS)).alias("bk")
-    )
+    this semi-join shape per config since round 13."""
+    sig = _minhash_signatures(hs)
+    bands = _lsh_bands(sig)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(b, (F.col("a.bk") == F.col("b.bk")) & (F.col("a.doc_id") < F.col("b.doc_id")))
@@ -205,14 +269,9 @@ def _minhash_pairs_for(d: DataFrame, hs: DataFrame | None = None) -> DataFrame:
     builds it, plan-identical to pre-round-11."""
     # Everything runs over ROW-wise hashed shingles (one codegen'd md5 per
     # position — see operators/text.shingle_rows; the array-HOF form costs
-    # ~10s/pass at sf0.1 on Spark's interpreted lambda path):
-    # - the 16 signature slots are codegen'd MIN aggregates over the
-    #   hashed rows (map-side partials), not higher-order array folds;
-    # - candidate verification counts shared hashes per candidate pair via
-    #   an equi-join on the hash value — no per-pair array intersect.
-    # Docs with zero shingles drop out at the explode instead of carrying
-    # all-NULL signatures; their candidate pairs were jaccard-NULL-
-    # filtered anyway (identically in the oracle).
+    # ~10s/pass at sf0.1 on Spark's interpreted lambda path). Docs with
+    # zero shingles drop out of the signature aggregate; their candidate
+    # pairs were jaccard-NULL-filtered anyway (identically in the oracle).
     if hs is None:
         # Three downstream passes read hs (the signature aggregate and
         # both sides of the verify join) — the shared materialized
@@ -220,35 +279,8 @@ def _minhash_pairs_for(d: DataFrame, hs: DataFrame | None = None) -> DataFrame:
         # whole pair plan at sf0.1).
         hs = _shingle_hash_frame(d)
     cand, sizes = _minhash_band_candidates(hs)
-    inter = (
-        F.broadcast(cand)
-        .join(hs.alias("ha"), F.col("doc_a") == F.col("ha.doc_id"))
-        .join(
-            hs.alias("hb"),
-            (F.col("doc_b") == F.col("hb.doc_id"))
-            & (F.col("ha.h") == F.col("hb.h")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    jac = F.col("inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("inter")
-    ).cast("double")
-    return (
-        inter.join(
-            F.broadcast(
-                sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-            ),
-            "doc_a",
-        )
-        .join(
-            F.broadcast(
-                sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-            ),
-            "doc_b",
-        )
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_TAU)
+    return _jaccard_verify(
+        F.broadcast(cand), hs, hs, F.broadcast(sizes), F.broadcast(sizes)
     )
 
 
@@ -270,14 +302,16 @@ _MINHASH_SQL = (
 )
 
 
-def _band_key_sql(b: int) -> str:
+def _band_key_sql_cfg(b: int, rows: int) -> str:
     slots = " || ',' || ".join(
-        f"sig[{b * LSH_ROWS + r + 1}]::VARCHAR" for r in range(LSH_ROWS)
+        f"sig[{b * rows + r + 1}]::VARCHAR" for r in range(rows)
     )
     return f"'{b}:' || ({_d_hash60(slots, seed=b)})::VARCHAR"
 
 
-_BAND_KEYS_SQL = "[" + ", ".join(_band_key_sql(b) for b in range(LSH_BANDS)) + "]"
+_BAND_KEYS_SQL = (
+    "[" + ", ".join(_band_key_sql_cfg(b, LSH_ROWS) for b in range(LSH_BANDS)) + "]"
+)
 
 NEAR_DUP_MINHASH_LSH_SQL = f"""
 WITH toks AS ({_TOKS_SQL}),
@@ -432,11 +466,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tau > 0 anyway. Hash values are the shared md5 primitive, so the
     # oracle sees identical sets (collisions, if any, collapse
     # identically).
-    h = (
-        TX.shingle_rows(d, SHINGLE_K)
-        .select("doc_id", TX.hash60("g").alias("h"))
-        .distinct()
-    )
+    h = _shingle_hashes(d)
     sizes = h.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     inter = (
         h.alias("a")
@@ -3175,42 +3205,15 @@ def near_dup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     query: hot buckets are boilerplate shingle patterns, absorbed by
     AQE skew splitting.
 
-    Deliberately does NOT share `_minhash_pairs_for`: that helper backs
-    four standing driver verdicts (near_dup_minhash_lsh,
-    dedup_clusters, corpus_build_pipeline, leakage_safe_split), and
-    the two-frame generalization would change their plan lineage for
-    zero behavior gain — duplication here is cheaper than forfeiting
-    four green verdicts (registry staleness rule)."""
+    Both sides run the shared near-dup substrate (`_shingle_hashes`,
+    `_minhash_signatures`, `_lsh_bands`, `_jaccard_verify`); only the
+    candidate join between the two disjoint band frames is its own."""
     d = _docs(spark, sf_dir)
-    p = F.lit(TX.MINHASH_P)
 
     def side(frame: DataFrame):
-        hs = (
-            TX.shingle_rows(frame, SHINGLE_K)
-            .select("doc_id", TX.hash60("g").alias("h"))
-            .distinct()
-            .transform(materialize)  # read by the sig agg AND the verify join
-        )
-        sig = (
-            hs.groupBy("doc_id")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                *[
-                    F.min((F.lit(a) * (F.col("h") % p) + b) % p).alias(f"s{i}")
-                    for i, (a, b) in enumerate(TX.minhash_params(MINHASH_N))
-                ],
-            )
-            .select(
-                "doc_id",
-                "n",
-                F.array(*[f"s{i}" for i in range(MINHASH_N)]).alias("sig"),
-            )
-        )
-        bands = sig.select(
-            "doc_id",
-            F.explode(TX.lsh_band_keys("sig", LSH_BANDS, LSH_ROWS)).alias("bk"),
-        )
-        return hs, sig, bands
+        hs = _shingle_hash_frame(frame)  # read by the sig agg AND the verify join
+        sig = _minhash_signatures(hs)
+        return hs, sig, _lsh_bands(sig)
 
     hs_new, sig_new, bands_new = side(
         d.filter(F.pmod(F.col("doc_id"), F.lit(INCR_MOD)) == 0)
@@ -3227,39 +3230,13 @@ def near_dup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    inter = (
-        F.broadcast(cand)
-        .join(hs_new.alias("ha"), F.col("doc_new") == F.col("ha.doc_id"))
-        .join(
-            hs_idx.alias("hb"),
-            (F.col("doc_indexed") == F.col("hb.doc_id"))
-            & (F.col("ha.h") == F.col("hb.h")),
-        )
-        .groupBy("doc_new", "doc_indexed")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    jac = F.col("inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("inter")
-    ).cast("double")
-    return (
-        inter.join(
-            F.broadcast(
-                sig_new.select(F.col("doc_id").alias("doc_new"), F.col("n").alias("na"))
-            ),
-            "doc_new",
-        )
-        .join(
-            F.broadcast(
-                sig_idx.select(
-                    F.col("doc_id").alias("doc_indexed"), F.col("n").alias("nb")
-                )
-            ),
-            "doc_indexed",
-        )
-        .select("doc_new", "doc_indexed", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_TAU)
-        .orderBy("doc_new", "doc_indexed")
-    )
+    return _jaccard_verify(
+        F.broadcast(cand),
+        hs_new,
+        hs_idx,
+        F.broadcast(sig_new.select("doc_id", "n")),
+        F.broadcast(sig_idx.select("doc_id", "n")),
+    ).orderBy("doc_new", "doc_indexed")
 
 
 NEAR_DUP_INCREMENTAL_LSH_SQL = f"""
@@ -5520,20 +5497,7 @@ def minhash_estimator_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _lsh_audit_docs(_docs(spark, sf_dir))
     hs = _shingle_hash_frame(d)
     exact = _prefix_filter_pairs(d, hs=hs)
-    p = F.lit(TX.MINHASH_P)
-    sig = (
-        hs.groupBy("doc_id")
-        .agg(
-            *[
-                F.min((F.lit(a) * (F.col("h") % p) + b) % p).alias(f"s{i}")
-                for i, (a, b) in enumerate(TX.minhash_params(MINHASH_N))
-            ]
-        )
-        .select(
-            "doc_id",
-            F.array(*[f"s{i}" for i in range(MINHASH_N)]).alias("sig"),
-        )
-    )
+    sig = _minhash_signatures(hs)
     pairs = (
         exact.join(
             sig.select(
@@ -7387,21 +7351,8 @@ def lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = materialize(
         _prefix_filter_pairs(d, hs=hs).select("doc_a", "doc_b", "jaccard")
     )
-    p = F.lit(TX.MINHASH_P)
     # consumed by: both sides of the one tagged band-key self-join
-    sig = materialize(
-        hs.groupBy("doc_id")
-        .agg(
-            *[
-                F.min((F.lit(a) * (F.col("h") % p) + b) % p).alias(f"s{i}")
-                for i, (a, b) in enumerate(TX.minhash_params(MINHASH_N))
-            ],
-        )
-        .select(
-            "doc_id",
-            F.array(*[f"s{i}" for i in range(MINHASH_N)]).alias("sig"),
-        )
-    )
+    sig = materialize(_minhash_signatures(hs).select("doc_id", "sig"))
     band_col = F.floor(F.col("jaccard") * J_BAND_W).cast("int").alias("j_band")
     eb = exact.groupBy(band_col).agg(F.count(F.lit(1)).alias("n_exact"))
     # ONE tagged band-key explode + ONE bucket self-join for the whole
@@ -7439,7 +7390,7 @@ def lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     hb = (
-        cand.join(F.broadcast(exact), ["doc_a", "doc_b"])
+        cand.join(exact, ["doc_a", "doc_b"])
         .groupBy("config", band_col)
         .agg(F.count(F.lit(1)).alias("n_cand"))
     )
@@ -7471,13 +7422,6 @@ def lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("config", "j_band")
     )
-
-
-def _band_key_sql_cfg(b: int, rows: int) -> str:
-    slots = " || ',' || ".join(
-        f"sig[{b * rows + r + 1}]::VARCHAR" for r in range(rows)
-    )
-    return f"'{b}:' || ({_d_hash60(slots, seed=b)})::VARCHAR"
 
 
 def _lsh_band_tuning_sql() -> str:

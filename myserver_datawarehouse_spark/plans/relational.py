@@ -6663,21 +6663,17 @@ def partition_evolution_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that explicit (no read-through-manifest race), and the rollup's
     # tasks back-fill the rewrite's stage tails. ~12 driver-blocking
     # jobs of rollup+compact previously ran strictly serialized.
-    from concurrent.futures import ThreadPoolExecutor
+    from myserver_datawarehouse_spark.session import parallel_actions
 
     v3_pre = os.path.join(root, M._published_version(root))
-    before_rows = (
+    before_rows, _ = parallel_actions(
         EV.read_snapshot_dir(spark, v3_pre)
         .groupBy("event_type")
         .agg(*rollup_cols)
+        .collect,
+        lambda: EV.compact_evolved(spark, root),
     )
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_before = pool.submit(before_rows.collect)
-        f_compact = pool.submit(EV.compact_evolved, spark, root)
-        before = {
-            r.event_type: (r.n_rows, r.sum_value) for r in f_before.result()
-        }
-        f_compact.result()
+    before = {r.event_type: (r.n_rows, r.sum_value) for r in before_rows}
     after = {
         r.event_type: (r.n_rows, r.sum_value)
         for r in M.read_published(spark, root)

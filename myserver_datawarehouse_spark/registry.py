@@ -11,6 +11,10 @@ oracle SQL (see SURVEY.md §5).
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -1724,305 +1728,80 @@ _SPECS: list[QuerySpec] = [
 # ---------------------------------------------------------------------
 # Adjudication order: least-recently-adjudicated first. The external
 # CORRECTNESS gate checks the registry head-first under a fixed budget
-# (~50 queries/round), so the ordering rule is simply staleness:
-#   0. never adjudicated in its CURRENT form — a rename, semantics or
-#      plan change, or new query always returns here so changed outputs
-#      are re-checked. After the round-13 fold every one of the 228
-#      registry queries has a green driver verdict at its current name;
-#      this head tier holds only round-14 additions/changes.
-#   1. last adjudicated in round 9 (36 standing at the staleness
-#      bound — the round-13 VERDICT ordered these to head the
-#      round-14 budget; the judge pre-verified 8 of them green at
-#      sf0.01);
-#   2. last adjudicated in round 10 (49 standing);
-#   3. last adjudicated in round 11 (47 standing);
-#   4. last adjudicated in round 12 (46 standing);
-#   5. last adjudicated in round 13 (50 standing — CORRECTNESS_r13.json
-#      was 50/50 green: the 27 round-8 stragglers, the round-13
-#      additions, and the two plan-changed re-heads all moved here).
-# Within each tier, preserve the maintained _SPECS order above. Over
-# successive rounds every query converges to a recent driver verdict.
+# (~50 queries/round), so the ordering rule is simply staleness, and
+# it is DERIVED from the CORRECTNESS records, never pasted in:
+#   - `latest_green_round` reads every CORRECTNESS_r<N>.json beside the
+#     package; a query's tier is the round of its latest green verdict
+#     (a later FAIL invalidates the standing verdict);
+#   - tier 0 (the head) holds queries with no standing green verdict:
+#     new queries, renames, and every name in _OUTPUT_CHANGED whose
+#     recorded change round is later than its latest green verdict (a
+#     verdict checks OUTPUT, so only an output change, not a plan or
+#     lineage change, sends a query back to the head).
+# The sort is stable, so each tier keeps the maintained _SPECS order,
+# and a fresh clone without the records keeps the declared order.
+# Every new record advances the rotation by itself: over successive
+# rounds every query converges to a recent verdict.
 #
-# GROWTH-BUDGET POLICY (asserted by test_staleness_debt_bounded):
-# with a 50-query/round adjudication budget, a registry of N queries
-# fully rotates in ceil(N/50) rounds, so the stalest legitimate
-# standing verdict is ceil(N/50) rounds older than the newest folded
-# record. Keep (new/changed queries per round) + (stalest standing
-# tier) <= 50 so the budget always clears the head AND the oldest
-# tier; at N=228 that means <= ~14 new queries/round steady-state
-# (the round-13 VERDICT capped round 14 explicitly at ~14).
-#
-# Round-15 maintenance: run tools/refresh_adjudication.py once
-# CORRECTNESS_r14.json lands, paste its sets here (latest green verdict
-# wins; later FAIL invalidates), and keep any query changed in round 14
-# OUT of every set so it returns to the head.
+# GROWTH-BUDGET POLICY (asserted by test_staleness_debt_bounded and
+# test_growth_budget_clears_head_and_stalest_tier): with a
+# 50-query/round adjudication budget, a registry of N queries fully
+# rotates in ceil(N/50) rounds, so the stalest legitimate standing
+# verdict is ceil(N/50) rounds older than the newest record. Keep
+# (new/changed queries per round) + (stalest standing tier) <= 50 so
+# the budget always clears the head AND the oldest tier.
 
-_ADJUDICATED_R9 = frozenset(
-    {
-        "approx_distinct_audit",
-        "bm25_search",
-        "bpe_encode_corpus",
-        "bpe_merge_training",
-        "brand_affinity_rules",
-        "customer_fuzzy_match",
-        "cusum_changepoint",
-        "document_chunks",
-        "embedding_ann_ivf",
-        "embedding_ivfpq_search",
-        "equi_depth_histogram",
-        "event_transition_matrix",
-        "events_grouping_sets",
-        "events_multires_rollup",
-        "events_value_band_join",
-        "first_last_event_probe",
-        "hybrid_search_rrf",
-        "interpolate_cross_midnight",
-        "keyword_search_conjunctive",
-        "multimodal_frame_sample",
-        "naive_bayes_langid",
-        "normalized_quotes",
-        "part_brand_margin_topk",
-        "partition_evolution_audit",
-        "rolling_minute_avg",
-        "salted_user_counts",
-        "seasonal_naive_backtest",
-        "streaming_cdc_replication",
-        "streaming_evolved_upsert",
-        "streaming_gap_state",
-        "streaming_outer_attribution",
-        "supplier_pareto_skyline",
-        "token_triangle_count",
-        "trailing_range_window_sum",
-        "user_spend_quartiles",
-        "value_drift_psi",
-    }
+_RECORDS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "CORRECTNESS_r*.json",
 )
 
-_ADJUDICATED_R10 = frozenset(
-    {
-        "ann_recall_audit",
-        "below_avg_quantity_revenue",
-        "benchmark_contamination",
-        "brand_revenue_concentration",
-        "brand_size_disjunctive_revenue",
-        "context_pack_bins",
-        "customer_fuzzy_match_edit2",
-        "customer_order_distribution",
-        "decayed_user_value",
-        "dedup_exact",
-        "dim_date_flag_stats",
-        "dim_date_flags",
-        "dim_time_table",
-        "doc_fingerprint_winnow",
-        "dup_span_removal",
-        "embedding_ivfpq_refined",
-        "events_daily_pivot",
-        "events_json_props",
-        "idle_balance_audit",
-        "lang_centroid_similarity",
-        "lang_id_confusion",
-        "late_shipment_priority",
-        "local_supplier_volume",
-        "nation_market_share",
-        "nation_trade_flows",
-        "near_dup_simhash",
-        "ngram_jaccard_pairs",
-        "null_key_rollup",
-        "orc_roundtrip_pricing",
-        "order_priority_audit",
-        "pii_scrub_audit",
-        "pipeline_validation",
-        "promo_revenue_share",
-        "referential_orphan_audit",
-        "sheets_export_frame",
-        "sources_dim_colors",
-        "stratified_sample",
-        "streaming_compaction_race",
-        "text_quality_scores",
-        "text_repetition_stats",
-        "text_stats_by_lang",
-        "tfidf_top_terms",
-        "token_counts",
-        "top_volume_orders",
-        "train_val_test_split",
-        "unigram_xent_quality",
-        "user_sessionization",
-        "user_snapshot_diff",
-        "user_spend_quartiles_broadcast",
-    }
-)
+# {query: round its output last changed}; add an entry when a change
+# alters a query's output without renaming it. Empty if nothing changed.
+_OUTPUT_CHANGED: dict[str, int] = {}
 
-_ADJUDICATED_R11 = frozenset(
-    {
-        "ann_nprobe_clustered",
-        "approx_quantile_audit",
-        "bloom_file_skip_audit",
-        "bpe_fertility_by_lang",
-        "bpe_sampled_training",
-        "corpus_build_pipeline",
-        "corpus_curation_pipeline",
-        "csv_roundtrip_pricing",
-        "dedup_clusters",
-        "dpp_partitioned_revenue",
-        "embedding_ann_bucketed",
-        "embedding_ann_multiprobe",
-        "embedding_norm_stats_by_label",
-        "embedding_topk_bruteforce",
-        "embedding_topk_bruteforce_baseline",
-        "gapfill_locf_windowed",
-        "gapfill_missing_minutes_windowed",
-        "heavy_hitters_cm_audit",
-        "interpolate_minutes_bracketing_windowed",
-        "interpolate_minutes_nearest2_windowed",
-        "ivf_incremental_ingest_audit",
-        "jsonl_roundtrip_pricing",
-        "min_cost_supplier",
-        "multimodal_features",
-        "multimodal_type_rollup",
-        "nation_top_customers_listagg",
-        "near_dup_embedding_cosine",
-        "near_dup_embedding_cosine_baseline",
-        "near_dup_image_phash",
-        "near_dup_minhash_lsh",
-        "near_dup_prefix_filter",
-        "part_supplier_variety",
-        "promotable_part_suppliers",
-        "returned_item_losses",
-        "semantic_dedup_clusters",
-        "share_of_total",
-        "share_of_total_broadcast",
-        "sole_returner_suppliers",
-        "star_join_revenue",
-        "streaming_bloom_maintained",
-        "streaming_click_attribution",
-        "streaming_dedup_counts",
-        "streaming_minute_agg",
-        "streaming_restart_exactly_once",
-        "streaming_watermark_audit",
-        "top_supplier_per_nation",
-        "top_supplier_revenue",
-    }
-)
 
-_ADJUDICATED_R12 = frozenset(
-    {
-        "bloom_evolved_carry_audit",
-        "bloom_pruned_join",
-        "bpe_holdout_coverage",
-        "bucketed_colocated_join",
-        "cross_modal_curation",
-        "data_mixture_rebalance",
-        "day_over_day_change",
-        "dedup_incremental_new_docs",
-        "dedup_quality_canonical",
-        "dim_date_integrity",
-        "embedding_ann_bucketed_baseline",
-        "embedding_int8_quantization",
-        "embedding_pq_adc_audit",
-        "events_cube_rollup",
-        "events_funnel_conversion",
-        "flagship_hourly_pipeline",
-        "freshness_probe",
-        "full_history_rebuild",
-        "grouped_topk_dense",
-        "kmeans_ivf_clusters",
-        "latest_event_per_user_type",
-        "layout_zorder_stats",
-        "leakage_safe_split",
-        "lsh_recall_audit",
-        "near_dup_audio_fingerprint",
-        "near_dup_incremental_lsh",
-        "near_dup_video_frames",
-        "quality_percentile_filter",
-        "ranking_report",
-        "scd2_user_history",
-        "shipping_priority_topk",
-        "source_numeric_ids",
-        "source_vocab_overlap",
-        "sources_lifecycle",
-        "sources_summary",
-        "streaming_band_rollup",
-        "streaming_ivf_ingest",
-        "streaming_mix_drift",
-        "streaming_session_windows",
-        "streaming_upsert_merge",
-        "temperature_resampled_mix",
-        "timestamp_roundtrip",
-        "training_shard_plan",
-        "user_retention_cohorts",
-        "value_histogram",
-        "value_outliers_mad",
-    }
-)
+def latest_green_round(pattern: str = _RECORDS) -> dict[str, int]:
+    """{query: round of its latest green verdict} over the
+    CORRECTNESS_r<N>.json records matching `pattern`. Green means
+    rows, schema and hash all match (rows-only entries, with no
+    schema/hash verdict, count on rows). Latest verdict wins, and a
+    later FAIL invalidates the standing verdict."""
+    latest: dict[str, int] = {}
+    # Sort by PARSED round number, not filename: lexicographic order
+    # breaks on unpadded/three-digit rounds (r2 vs r10, r100 vs r02)
+    # and could resurrect an invalidated verdict.
+    paths = sorted(
+        glob.glob(pattern),
+        key=lambda p: int(re.search(r"_r(\d+)\.json$", p).group(1)),
+    )
+    for path in paths:
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        with open(path) as fh:
+            data = json.load(fh)
+        for name, res in data.items():
+            rows = res.get("rows_match")
+            schema = res.get("schema_match")
+            hashm = res.get("hash_match")
+            green = bool(rows) and (
+                (schema is None and hashm is None)
+                or (bool(schema) and bool(hashm))
+            )
+            if green:
+                latest[name] = rnd
+            elif name in latest and latest[name] < rnd:
+                del latest[name]
+    return latest
 
-_ADJUDICATED_R13 = frozenset(
-    {
-        "big_spender_customers",
-        "column_correlation_profile",
-        "customers_without_orders",
-        "dedup_threshold_sweep",
-        "deletion_vector_audit",
-        "distinct_scan",
-        "dsir_importance_weights",
-        "dup_ngram_coverage",
-        "embedding_binary_hamming_rerank",
-        "embedding_covariance_probe",
-        "embedding_matryoshka_audit",
-        "embedding_pca_audit",
-        "event_dow_chisquare",
-        "events_asof_enrichment",
-        "events_asof_forward",
-        "events_daily_unpivot",
-        "file_skipping_scan_audit",
-        "first_appearance_order",
-        "gopher_quality_flags",
-        "incremental_agg_maintenance",
-        "incremental_join_maintenance",
-        "lsh_band_tuning",
-        "merge_writer_lifecycle",
-        "minhash_estimator_audit",
-        "minute_anomaly_zscore",
-        "ngram_lm_quality_gate",
-        "phrase_search_positional",
-        "pricing_summary",
-        "quality_filter_agreement",
-        "quality_weighted_sample",
-        "revenue_rollup",
-        "scd2_point_in_time_join",
-        "set_except",
-        "set_intersect",
-        "source_mix_entropy",
-        "stats_profile",
-        "streaming_cdc_apply",
-        "streaming_curation_ledger",
-        "streaming_dedup_within_watermark",
-        "streaming_near_dup_ingest",
-        "table_changes_feed",
-        "table_compaction_audit",
-        "table_time_travel_audit",
-        "theta_sketch_overlap",
-        "token_pagerank",
-        "token_zipf_fit",
-        "training_epoch_plan",
-        "user_erasure_audit",
-        "value_percentiles",
-        "word_cooccurrence_pmi",
-    }
-)
+
+_LATEST_GREEN = latest_green_round()
 
 
 def _staleness(name: str) -> int:
-    if name in _ADJUDICATED_R13:
-        return 5
-    if name in _ADJUDICATED_R12:
-        return 4
-    if name in _ADJUDICATED_R11:
-        return 3
-    if name in _ADJUDICATED_R10:
-        return 2
-    if name in _ADJUDICATED_R9:
-        return 1
-    return 0  # never adjudicated in current form — check first
+    """Round of the query's standing green verdict; 0 (check first)
+    when it has none or its output changed after it."""
+    rnd = _LATEST_GREEN.get(name, 0)
+    return 0 if _OUTPUT_CHANGED.get(name, 0) > rnd else rnd
 
 
 _SPECS.sort(key=lambda s: _staleness(s.name))  # stable: keeps in-tier order

@@ -15,6 +15,8 @@ Centralizes the configuration that the whole engine depends on:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -116,3 +118,24 @@ def materialize(df: DataFrame) -> DataFrame:
     # the directory is cleaned — the standard Spark trade for state
     # that must survive executor loss.
     return df.checkpoint(eager=True)
+
+
+def parallel_actions(*thunks: Callable[[], Any]) -> list[Any]:
+    """Run independent blocking Spark actions concurrently
+    (guide §2.6, overlap independent jobs) and return their results in
+    submission order. Jobs over a few hundred rows each are dominated
+    by per-job fixed cost (schedule, commit) and their task tails
+    leave almost every core idle, so a small pool (at most 4 in
+    flight) lets the next job's tasks back-fill.
+
+    BARRIER semantics: returns only when every action finished
+    (callers rely on e.g. all-indexes-written-before-probe ordering).
+    If an action raises, the first exception in submission order
+    propagates, but only after every action has finished."""
+    if len(thunks) == 1:
+        return [thunks[0]()]
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=min(4, len(thunks))) as pool:
+        futures = [pool.submit(t) for t in thunks]
+    return [f.result() for f in futures]

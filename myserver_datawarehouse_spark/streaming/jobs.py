@@ -32,6 +32,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from myserver_datawarehouse_spark.session import parallel_actions
+
 # events.parquet carries TIMESTAMP(NANOS); depending on the Spark build
 # the scan yields either a long of nanos (legacy nanosAsLong path) or a
 # native TIMESTAMP_NTZ truncated to micros. The streaming source needs an
@@ -1152,7 +1154,7 @@ def outer_attribution_stream(
     # slices — pooled (guide §2.6, the _stage_ordered_inputs pattern);
     # the mtime stamping that encodes replay order stays sequential
     # after the barrier.
-    _parallel_actions(
+    parallel_actions(
         *[(lambda k=k: _extract(k)) for k in range(OUTER_ATTR_BATCHES)]
     )
     mtime = 1_700_000_000
@@ -1320,19 +1322,12 @@ def bloom_maintained_stream(
     keep, _total = FS.bloom_prune_files(spark, final, "event_id", probes)
     # The pruned-read count and the full-scan count are independent
     # jobs over the same snapshot — pooled (guide §2.6).
-    counts: dict[str, int] = {}
-    _parallel_actions(
-        lambda: counts.__setitem__(
-            "pruned",
-            spark.read.parquet(*keep)
-            .filter(F.col("event_id").isin(*probes))
-            .count(),
-        ),
-        lambda: counts.__setitem__(
-            "full", table.filter(F.col("event_id").isin(*probes)).count()
-        ),
+    pruned_n, full_n = parallel_actions(
+        lambda: spark.read.parquet(*keep)
+        .filter(F.col("event_id").isin(*probes))
+        .count(),
+        lambda: table.filter(F.col("event_id").isin(*probes)).count(),
     )
-    pruned_n, full_n = counts["pruned"], counts["full"]
     flags = {
         "bloom_carried": bool(carried),
         "zero_false_negatives": bool(pruned_n == full_n and full_n > 0),
@@ -1502,46 +1497,22 @@ NEAR_DUP_INGEST_BATCHES = 3  # arrivals split by (doc_id div 5) % 3
 
 
 def _near_dup_index_frames(frame: DataFrame, batch_no: int):
-    """(hashes, sizes, bands) for any (doc_id, text) frame — the
-    signature scheme of plans/llm_text.near_dup_incremental_lsh,
-    DELIBERATELY duplicated rather than extracted from it (that helper
-    family backs standing driver verdicts; the set-equality test in
-    tests/test_round12b.py pins this copy to the original, so drift
-    fails the suite, not the user)."""
-    from myserver_datawarehouse_spark.operators import text as TX
+    """(hashes, sizes, bands) for any (doc_id, text) frame, built by the
+    near-dup substrate of plans/llm_text (the same signature scheme as
+    the batch `near_dup_incremental_lsh`); bands carry `batch_no`. The
+    hash frame is persisted: the index write and the verify join both
+    read it (callers unpersist after the probe)."""
     from myserver_datawarehouse_spark.plans.llm_text import (
-        LSH_BANDS,
-        LSH_ROWS,
-        MINHASH_N,
-        SHINGLE_K,
+        _lsh_bands,
+        _minhash_signatures,
+        _shingle_hashes,
     )
 
-    p = F.lit(TX.MINHASH_P)
-    hs = (
-        TX.shingle_rows(frame, SHINGLE_K)
-        .select("doc_id", TX.hash60("g").alias("h"))
-        .distinct()
-    )
+    hs = _shingle_hashes(frame)
     hs.persist()
-    sig = (
-        hs.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            *[
-                F.min((F.lit(a) * (F.col("h") % p) + b) % p).alias(f"s{i}")
-                for i, (a, b) in enumerate(TX.minhash_params(MINHASH_N))
-            ],
-        )
-        .select(
-            "doc_id",
-            "n",
-            F.array(*[f"s{i}" for i in range(MINHASH_N)]).alias("sig"),
-        )
-    )
-    bands = sig.select(
-        "doc_id",
-        F.explode(TX.lsh_band_keys("sig", LSH_BANDS, LSH_ROWS)).alias("bk"),
-        F.lit(batch_no).cast("int").alias("batch_no"),
+    sig = _minhash_signatures(hs)
+    bands = _lsh_bands(sig).withColumn(
+        "batch_no", F.lit(batch_no).cast("int")
     )
     return hs, sig.select("doc_id", "n"), bands
 
@@ -1570,8 +1541,8 @@ def _near_dup_ingest_one(
     # index first (self-inclusive probe); idempotent per-batch
     # overwrite. The three writes are independent jobs over O(batch)
     # rows — run them pooled (guide §2.6); the barrier inside
-    # _parallel_actions keeps the write-before-probe ordering.
-    _parallel_actions(
+    # parallel_actions keeps the write-before-probe ordering.
+    parallel_actions(
         lambda: bd.write.mode("overwrite").parquet(
             os.path.join(bands_dir, sub)
         ),
@@ -1603,7 +1574,7 @@ def _near_dup_verified_pairs(
     doc_partner, jaccard) — the probe half of `_near_dup_ingest_one`,
     factored out so the streaming curation ledger's text arm runs the
     IDENTICAL candidate + verify path."""
-    from myserver_datawarehouse_spark.plans.llm_text import JACCARD_TAU
+    from myserver_datawarehouse_spark.plans.llm_text import _jaccard_verify
 
     idx_bands = _read_tree(sp, bands_dir)
     cand = (
@@ -1623,46 +1594,17 @@ def _near_dup_verified_pairs(
         .select("doc_new", F.col("ix.doc_id").alias("doc_partner"))
         .distinct()
     )
-    idx_h = _read_tree(sp, hashes_dir)
-    idx_n = _read_tree(sp, sizes_dir)
-    inter = (
-        F.broadcast(cand)
-        .join(hs.alias("ha"), F.col("doc_new") == F.col("ha.doc_id"))
-        .join(
-            idx_h.alias("hb"),
-            (F.col("doc_partner") == F.col("hb.doc_id"))
-            & (F.col("ha.h") == F.col("hb.h")),
-        )
-        .groupBy("doc_new", "doc_partner")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    jac = F.col("inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("inter")
-    ).cast("double")
-    return (
-        inter.join(
-            F.broadcast(
-                sz.select(
-                    F.col("doc_id").alias("doc_new"),
-                    F.col("n").alias("na"),
-                )
-            ),
-            "doc_new",
-        )
-        .join(
-            idx_n.select(
-                F.col("doc_id").alias("doc_partner"),
-                F.col("n").alias("nb"),
-            ),
-            "doc_partner",
-        )
-        .select(
-            F.lit(bno).cast("int").alias("batch_no"),
-            "doc_new",
-            "doc_partner",
-            F.round(jac, 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= JACCARD_TAU)
+    return _jaccard_verify(
+        F.broadcast(cand),
+        hs,
+        _read_tree(sp, hashes_dir),
+        F.broadcast(sz),
+        _read_tree(sp, sizes_dir),
+    ).select(
+        F.lit(bno).cast("int").alias("batch_no"),
+        "doc_new",
+        "doc_partner",
+        "jaccard",
     )
 
 
@@ -1671,25 +1613,6 @@ def _read_tree(sp: SparkSession, root: str) -> DataFrame:
     return (
         sp.read.option("recursiveFileLookup", "true").parquet(root)
     )
-
-
-def _parallel_actions(*thunks) -> None:
-    """Run independent driver-blocking Spark actions concurrently
-    (guide §2.6, overlap independent jobs): a micro-batch's index
-    writes are separate jobs over a few hundred rows each, so their
-    per-job fixed cost (schedule, commit) dominates and their task
-    tails leave almost every core idle — a small pool lets the next
-    write's tasks back-fill. BARRIER semantics: returns only when
-    every action finished (callers rely on all-indexes-written-before-
-    probe ordering), and the first exception propagates."""
-    if len(thunks) == 1:
-        thunks[0]()
-        return
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(4, len(thunks))) as pool:
-        for f in [pool.submit(t) for t in thunks]:
-            f.result()
 
 
 def _stage_ordered_inputs(
@@ -1710,7 +1633,7 @@ def _stage_ordered_inputs(
     ]
     for s in stages:
         shutil.rmtree(s, ignore_errors=True)
-    _parallel_actions(
+    parallel_actions(
         *[
             (
                 lambda k=k, s=s: arrivals.filter(F.col("batch_no") == k)
@@ -1779,7 +1702,7 @@ def near_dup_ingest_stream(
     # Three independent writes off one persisted shingle frame — pooled
     # (guide §2.6).
     hs0, sz0, bd0 = _near_dup_index_frames(docs.filter(~is_arrival), -1)
-    _parallel_actions(
+    parallel_actions(
         lambda: bd0.write.mode("overwrite").parquet(
             os.path.join(bands_dir, "b_base")
         ),
@@ -2231,7 +2154,7 @@ def _curation_one(sp: SparkSession, d: dict, one: DataFrame, bno: int) -> None:
     # over O(batch) rows — all four pooled (guide §2.6); the barrier
     # keeps the write-before-probe ordering.
     hs, sz, bd = _near_dup_index_frames(one, bno)
-    _parallel_actions(
+    parallel_actions(
         lambda: bd.write.mode("overwrite").parquet(
             os.path.join(d["tbands"], sub)
         ),
@@ -2383,7 +2306,7 @@ def curation_ledger_stream(
     # corpus twice (text shingles + fused media kernel) instead of 4x.
     standing = docs.filter(~is_arrival)
     hs0, sz0, bd0 = _near_dup_index_frames(standing, -1)
-    _parallel_actions(
+    parallel_actions(
         lambda: bd0.write.mode("overwrite").parquet(
             os.path.join(d["tbands"], "b_base")
         ),

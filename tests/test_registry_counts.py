@@ -37,13 +37,10 @@ def test_staleness_debt_bounded():
     adjudication budget. The bound is DERIVED, not hard-coded: a
     registry of N queries on a 50/round budget fully rotates in
     ceil(N/50) rounds, so the stalest legitimate tier is
-    newest_folded - ceil(N/50). Staleness is measured against the
-    newest record FOLDED into registry.py's _ADJUDICATED_R* sets —
-    the newest CORRECTNESS_r*.json on disk is tolerated unfolded for
-    exactly one round (the driver writes it at round end; the fold is
-    the next round's first maintenance task). This is the mechanism
-    fix the round-7 and round-8 verdicts both asked for: the test no
-    longer re-arms when a new record lands before the fold."""
+    newest_folded - ceil(N/50). Tiers are read through
+    registry._staleness, which derives each query's round from the
+    CORRECTNESS_r*.json records. The newest record on disk may lead
+    the newest derived tier by at most one round."""
     import glob
     import math
     import re
@@ -55,23 +52,22 @@ def test_staleness_debt_bounded():
     if not rounds:  # fresh clone without driver artifacts
         return
     newest_file = max(rounds)
-    folded = [
-        r
-        for r in range(1, newest_file + 1)
-        if getattr(registry, f"_ADJUDICATED_R{r}", frozenset())
-    ]
-    assert folded, "no _ADJUDICATED_R* tier folded into registry.py"
+    tiers: dict[int, list[str]] = {}
+    for s in registry.specs():
+        tiers.setdefault(registry._staleness(s.name), []).append(s.name)
+    folded = [r for r in tiers if r > 0]
+    assert folded, "no adjudication tier derived from the records"
     newest_folded = max(folded)
     # The fold may lag the newest on-disk record by at most one round.
     assert newest_file - newest_folded <= 1, (
         f"CORRECTNESS_r{newest_file}.json exists but the newest folded "
-        f"tier is round {newest_folded}; run tools/refresh_adjudication.py"
+        f"tier is round {newest_folded}"
     )
     rotation = math.ceil(len(registry.specs()) / ADJUDICATION_BUDGET)
     for r in range(2, newest_folded - rotation):
-        tier = getattr(registry, f"_ADJUDICATED_R{r}", frozenset())
+        tier = tiers.get(r, [])
         assert not tier, (
-            f"_ADJUDICATED_R{r} still holds {len(tier)} queries but the "
+            f"tier {r} still holds {len(tier)} queries but the "
             f"newest folded record is round {newest_folded} and a full "
             f"rotation is {rotation} rounds; the budget was not spent "
             f"on the stalest tier"

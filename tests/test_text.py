@@ -68,6 +68,41 @@ def test_lsh_bands_near_dups_collide(spark):
     assert k1 & k2  # high-overlap docs share at least one band
 
 
+def test_rowwise_signature_matches_array_form(spark):
+    """The near-dup substrate's row-wise signature aggregate equals the
+    array-form TX.minhash_signature per doc; a doc too short for any
+    k-shingle has no hash rows and drops out."""
+    from myserver_datawarehouse_spark.plans import llm_text as LTX
+
+    df = spark.createDataFrame(
+        [
+            (1, "a b c d e f"),
+            (2, "the quick brown fox jumps over the quick brown fox"),
+            (3, "w1 w2 w3 w4 w5 w6 w7 zz"),
+            (4, "too short"),
+        ],
+        "doc_id long, text string",
+    )
+    got = {
+        r.doc_id: (r.n, r.sig)
+        for r in LTX._minhash_signatures(LTX._shingle_hashes(df)).collect()
+    }
+    sh = TX.shingles(TX.tokenize("text"), LTX.SHINGLE_K)
+    want = {
+        r.doc_id: (r.n, r.sig)
+        for r in df.select(
+            "doc_id",
+            F.size(sh).alias("n"),
+            TX.minhash_signature(sh, LTX.MINHASH_N).alias("sig"),
+        ).collect()
+    }
+    assert set(got) == {1, 2, 3}
+    assert want[4][0] == 0
+    for doc_id, (n, sig) in got.items():
+        assert (n, sig) == want[doc_id]
+        assert len(sig) == LTX.MINHASH_N
+
+
 def test_simhash_range_and_identity(spark):
     df = spark.createDataFrame(
         [("same1", "p q r s t"), ("same2", "p q r s t"), ("diff", "z9 z8 z7 z6 z5")],

@@ -33,10 +33,8 @@ def test_lint_flags_null_promoted_spark_int(spark):
 
 def test_refresh_adjudication_latest_wins_and_fail_invalidates(tmp_path):
     import json
-    import sys
 
-    sys.path.insert(0, "/root/repo/tools")
-    from refresh_adjudication import latest_green_round
+    from myserver_datawarehouse_spark.registry import latest_green_round
 
     (tmp_path / "CORRECTNESS_r01.json").write_text(
         json.dumps(
